@@ -85,11 +85,13 @@ _HEAVY_TABLES = {"documents", "embeddings"}
 
 
 def _ps(sf_dir: str, name: str, heavy: bool | None = None) -> ParquetSource:
+    # plain is min_parallelism=1, not unset: Pipeline.from_ floors an
+    # unset root extract at "auto", and the policy above is per query
     if heavy is None:
         heavy = name in _HEAVY_TABLES
     return ParquetSource(
         f"{sf_dir}/{name}.parquet",
-        min_parallelism="auto" if heavy else None,
+        min_parallelism="auto" if heavy else 1,
     )
 
 

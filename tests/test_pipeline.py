@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -276,6 +278,36 @@ def test_limit_offset(spark):
         .run()
     )
     assert sorted(r["id"] for r in sink.rows) == [2, 3, 4]
+
+
+@pytest.mark.parametrize("case", [
+    "root", "lookup", "dataframe_root", "min_parallelism_1"])
+def test_root_extract_spread_across_cores(spark, tmp_path, case):
+    """A pipeline's root extract from a single-split parquet file gets
+    exactly one round-robin spread to defaultParallelism, so every sink
+    write runs on all cores. Lookup sources, DataFrame roots and an
+    explicit ``min_parallelism=1`` are never spread."""
+    from yaetl_spark.sinks import ParquetSink
+
+    li = table_path("lineitem")
+    n = spark.sparkContext.defaultParallelism
+    assert spark.read.parquet(li).rdd.getNumPartitions() < n
+    root = {
+        "root": ParquetSource(li),
+        "lookup": MemorySource([(1,)], "l_linenumber int"),
+        "dataframe_root": spark.read.parquet(li),
+        "min_parallelism_1": ParquetSource(li, min_parallelism=1),
+    }[case]
+    p = Pipeline(spark).from_(root)
+    if case == "lookup":
+        p.join(ParquetSource(li), OnClause("l_linenumber"))
+    out = str(tmp_path / "out.parquet")
+    p.to(ParquetSink(out)).run()
+    plan = p.df._jdf.queryExecution().executedPlan().toString()
+    spread = case == "root"
+    assert plan.count("RoundRobinPartitioning") == (1 if spread else 0)
+    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert (len(files) == n) == spread
 
 
 def test_run_event_callbacks(spark, sf_dir):

@@ -12,6 +12,8 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+
 from yaetl_spark import ParquetSource
 from yaetl_spark.sources.files import (
     _SCAN_CACHE,
@@ -88,15 +90,48 @@ def test_flat_directory_key_tracks_children(spark, tmp_path):
 
 
 def test_parallelism_probe_memoized(spark, sf_dir):
+    """The split probe runs once per session and input: a second read
+    of an ``'auto'`` source, or a second build of a pipeline rooted on
+    a parquet source with ``min_parallelism`` unset, adds no memo
+    entry."""
+    from yaetl_spark import Pipeline
     from yaetl_spark.session import _NEED_REPARTITION_MEMO
 
-    src = ParquetSource(f"{sf_dir}/documents.parquet",
-                        min_parallelism="auto")
-    df1 = src.read(spark)
-    memo = _NEED_REPARTITION_MEMO.get(spark, {})
-    n_before = len(memo)
-    assert n_before >= 1
-    df2 = src.read(spark)
-    assert len(_NEED_REPARTITION_MEMO.get(spark, {})) == n_before
-    # decision identical either way
-    assert df1.rdd.getNumPartitions() == df2.rdd.getNumPartitions()
+    auto = ParquetSource(f"{sf_dir}/documents.parquet",
+                         min_parallelism="auto")
+    root = ParquetSource(f"{sf_dir}/part.parquet")
+    for src, build in [
+        (auto, lambda: auto.read(spark)),
+        (root, lambda: Pipeline(spark).from_(root).df),
+    ]:
+        df1 = build()
+        memo = _NEED_REPARTITION_MEMO.get(spark, {})
+        n_before = len(memo)
+        key = (src._parallelism_cache_key(),
+               spark.sparkContext.defaultParallelism)
+        assert key in memo
+        df2 = build()
+        assert len(_NEED_REPARTITION_MEMO.get(spark, {})) == n_before
+        # decision identical either way
+        assert df1.rdd.getNumPartitions() == df2.rdd.getNumPartitions()
+
+
+@pytest.mark.parametrize("offset,limit", [(None, 5), (3, 3)])
+def test_limit_offset_pick_scan_rows_before_the_spread(
+        spark, sf_dir, offset, limit):
+    """``offset``/``limit`` select rows in scan order: the parallelism
+    spread runs after them, not before."""
+    p = f"{sf_dir}/lineitem.parquet"
+    src = ParquetSource(p, limit=limit, offset=offset, min_parallelism="auto")
+    want = spark.read.parquet(p)
+    if offset:
+        want = want.offset(offset)
+    want = want.limit(limit)
+
+    def keys(df):
+        return sorted((r.l_orderkey, r.l_linenumber) for r in df.collect())
+
+    got = src.read(spark)
+    assert keys(got) == keys(want)
+    assert "RoundRobinPartitioning" in (
+        got._jdf.queryExecution().executedPlan().toString())

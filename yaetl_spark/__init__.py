@@ -15,7 +15,6 @@ from .operators import (
     NoOp,
     OnClause,
     PandasMap,
-    PandasPredicate,
     Predicate,
     Rename,
     Replace,
@@ -38,7 +37,6 @@ from .sources import (
     MemorySource,
     OrcSource,
     ParquetSource,
-    RangeSource,
     TextLinesSource,
 )
 
@@ -56,7 +54,6 @@ __all__ = [
     "join",
     "as_of_join",
     "Predicate",
-    "PandasPredicate",
     "BreakAt",
     "ContinueAt",
     "StopWhen",
@@ -79,7 +76,6 @@ __all__ = [
     "JsonSource",
     "TextLinesSource",
     "MemorySource",
-    "RangeSource",
     "JdbcSource",
     "AggregateSource",
     # sinks

@@ -14,19 +14,13 @@ Parity (SURVEY.md §2.5, §2.8):
   the one remaining documented divergence — indistinguishable from a
   self-break in a vectorized plan.
 
-A qualifier accepts a Column, a SQL string, or a pandas Series predicate
-function (Arrow-batched; slow path).
+A qualifier accepts a Column or a SQL string.
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import pandas as _  # noqa: F401  (ensures pandas_udf availability)
 
 
 class Qualifier:
@@ -50,23 +44,6 @@ class Predicate(Qualifier):
         return df.filter(cond)
 
 
-class PandasPredicate(Qualifier):
-    """Callable qualifier escape hatch: ``pd.DataFrame -> bool Series``."""
-
-    def __init__(self, fn: Callable[[pd.DataFrame], pd.Series]):
-        self.fn = fn
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        fn = self.fn
-        schema = df.schema
-
-        def mapper(batches):
-            for batch in batches:
-                yield batch[fn(batch).astype(bool)]
-
-        return df.mapInPandas(mapper, schema=schema)
-
-
 class StopWhen(Qualifier):
     """Early termination — the tractable slice of targeted breaks.
 
@@ -75,6 +52,10 @@ class StopWhen(Qualifier):
     GlobalLimit, i.e. genuinely stops the scan (the distributed analogue of
     the reference's break-to-source,
     ``/root/reference/src/Qualifiers/QualifierAbstract.php:69-77``).
+    Without an ordering, WHICH N records is unspecified, as on any
+    multi-split input (a ``Pipeline`` root extract spread across cores
+    included); use :class:`BreakAt` or an explicit ``orderBy`` upstream
+    for a deterministic cut.
 
     For *targeted* breaks with deterministic record order, see
     :class:`BreakAt`.

@@ -139,11 +139,13 @@ class Pipeline:
             raise PipelineError("call from_() before adding downstream nodes")
         return self._df
 
-    def _coerce_source(self, source: Source | DataFrame) -> DataFrame:
+    def _coerce_source(
+        self, source: Source | DataFrame, root: bool = False
+    ) -> DataFrame:
         if isinstance(source, DataFrame):
             return source
         if isinstance(source, Source):
-            return source.read(self.spark)
+            return source.read(self.spark, root=root)
         raise TypeError(f"expected Source or DataFrame, got {type(source)!r}")
 
     def from_(
@@ -154,8 +156,27 @@ class Pipeline:
         """Add a record source. ``aggregate_with=True`` unions with the
         current source (AggregateExtractor parity, ``YaEtl.php:305-340``);
         a second plain ``from_`` is a cross join (sequential re-extraction
-        per upstream record, ``README.md:140-168`` — SURVEY.md §2.7)."""
-        df = self._coerce_source(source)
+        per upstream record, ``README.md:140-168`` — SURVEY.md §2.7).
+
+        Root-extract floor: the FIRST ``from_`` reads a :class:`Source`
+        whose ``min_parallelism`` is unset as if it were ``'auto'``, when
+        the source fingerprints its input (today a local
+        ``ParquetSource``). A scan with fewer splits than
+        ``defaultParallelism`` — a single-row-group file — then gets one
+        round-robin spread, so the joins, qualifiers, transforms and sink
+        writes below it use every core instead of one; a scan that
+        already splits is left alone. The split probe is memoized per
+        session and input, so rebuilding the pipeline does not repeat
+        it. Not floored: an explicit ``min_parallelism`` (``1`` never
+        spreads), DataFrame / Memory / JDBC roots (no fingerprint, so
+        the probe would run on every build), a second ``from_`` and
+        :meth:`join` lookup sources. The spread costs one exchange of the
+        root rows: in front of a broadcast join that is a win (an sf0.1
+        lineitem-orders-customer flow on 4 cores, 6.50 -> 4.10 s), in front
+        of a sort-merge join it adds to the join's own shuffle (the same
+        flow with both joins forced to sort-merge, 3.22 -> 4.17 s) — pass
+        ``min_parallelism=1`` there."""
+        df = self._coerce_source(source, root=self._df is None)
         self._counters["num_from"] += 1
         if self._count_stages:
             # observe the INCOMING source frame before it is combined so
@@ -306,10 +327,17 @@ class Pipeline:
         return self.join(source, clause, how="left", **kw)
 
     def limit(self, n: int) -> "Pipeline":
+        """Keep ``n`` rows. Without an ordering (e.g. ``transform(lambda
+        df: df.orderBy(...))``) WHICH rows is unspecified, as on any
+        multi-split input — the root-extract spread of :meth:`from_`
+        included. Use :class:`BreakAt` or an explicit ``orderBy`` for a
+        deterministic cut."""
         self._df = self._require_df().limit(n)
         return self
 
     def offset(self, n: int) -> "Pipeline":
+        """Skip ``n`` rows; unspecified rows without an ordering, see
+        :meth:`limit`."""
         self._df = self._require_df().offset(n)
         return self
 

@@ -1,6 +1,6 @@
 from .base import DataFrameSource, Source
 from .files import CsvSource, JsonSource, OrcSource, ParquetSource, TextLinesSource
-from .memory import MemorySource, RangeSource
+from .memory import MemorySource
 from .jdbc import JdbcSource
 from .aggregate import SHARD_COL, AggregateSource
 
@@ -13,7 +13,6 @@ __all__ = [
     "JsonSource",
     "TextLinesSource",
     "MemorySource",
-    "RangeSource",
     "JdbcSource",
     "AggregateSource",
     "SHARD_COL",

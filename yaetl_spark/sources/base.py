@@ -69,22 +69,33 @@ class Source:
         is not a pure function of an on-disk input."""
         return None
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        """Load + apply aliasing, limit/offset, and parallelism floor.
+    def read(self, spark: SparkSession, root: bool = False) -> DataFrame:
+        """Load + apply aliasing, offset/limit, then the parallelism floor.
 
         ``min_parallelism='auto'`` repartitions up to ``defaultParallelism``
         only when the scan yields fewer partitions (single-row-group files);
         a no-op on inputs that already split — see
-        :func:`yaetl_spark.session.ensure_parallelism`.
+        :func:`yaetl_spark.session.ensure_parallelism`. ``1`` never
+        spreads. The split count is probed on the scan, and the spread
+        comes last, so ``offset``/``limit`` pick rows in scan order.
+
+        ``root=True`` marks a pipeline's root extract
+        (:meth:`yaetl_spark.pipeline.Pipeline.from_`): with
+        ``min_parallelism`` unset it floors at ``'auto'`` when the source
+        fingerprints its input (:meth:`_parallelism_cache_key`), so the
+        probe runs once per session and input.
         """
         df = self.load(spark)
-        if self._min_parallelism:
-            from ..session import ensure_parallelism
+        floor = self._min_parallelism
+        key = self._parallelism_cache_key() if floor or root else None
+        if floor is None and root and key is not None:
+            floor = "auto"
+        n = None
+        if floor and floor != 1:
+            from ..session import spread_target
 
-            target = (None if self._min_parallelism == "auto"
-                      else int(self._min_parallelism))
-            df = ensure_parallelism(
-                df, target, cache_key=self._parallelism_cache_key())
+            n = spread_target(
+                df, None if floor == "auto" else int(floor), cache_key=key)
         if isinstance(self._key, Mapping):
             for old, new in self._key.items():
                 # 'table.col' aliases refer to the bare column client-side.
@@ -95,7 +106,7 @@ class Source:
             df = df.offset(self._offset)
         if self._limit is not None:
             df = df.limit(self._limit)
-        return df
+        return df.repartition(n) if n else df
 
 
 class DataFrameSource(Source):

@@ -163,12 +163,6 @@ def _candidate_files(path: str):
             yield p
 
 
-def _first_file(path: str) -> str | None:
-    """Resolve a path/glob/dir to its first regular file (driver-side,
-    O(1) I/O — same resolution the sep sniffer uses)."""
-    return next(_candidate_files(path), None)
-
-
 # bounded driver-side I/O: how many glob candidates the BOM sniffer will
 # open looking for a readable file / checking encoding agreement
 _SNIFF_MAX_FILES = 8

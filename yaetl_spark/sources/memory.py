@@ -2,9 +2,9 @@
 
 Parity targets: ``CallableExtractor``
 (``/root/reference/src/Extractors/CallableExtractor.php:50-98``) — records
-from a callable returning an iterable — and ``NullExtractor``
-(``NullExtractor.php:15-51``) — a pure record-count driver, which on Spark
-is ``spark.range`` (distributed, no data movement).
+from a callable returning an iterable. The ``NullExtractor``
+(``NullExtractor.php:15-51``) record-count driver needs no class here:
+``DataFrameSource(lambda spark: spark.range(n))``.
 """
 
 from __future__ import annotations
@@ -46,19 +46,3 @@ class MemorySource(Source):
         else:
             schema = self._schema
         return spark.createDataFrame(rows, schema=schema)
-
-
-class RangeSource(Source):
-    """``spark.range`` — the NullExtractor analogue (n synthetic records)."""
-
-    def __init__(self, n: int = 5000, start: int = 0, column: str = "id", **kw):
-        super().__init__(**kw)
-        self.n = n
-        self.start = start
-        self.column = column
-
-    def load(self, spark: SparkSession) -> DataFrame:
-        df = spark.range(self.start, self.start + self.n)
-        if self.column != "id":
-            df = df.withColumnRenamed("id", self.column)
-        return df
