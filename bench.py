@@ -24,11 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entry_mod  # noqa: E402
-from yaetl_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+from scripts.harness import (  # noqa: E402
+    CPUS, SF_DIR, entry, materialize, queries, session, warm_up)
 
 # sf encoded in the dir name, e.g. .../sf0.1
 try:
@@ -37,30 +34,16 @@ except (IndexError, ValueError):
     SF = -1.0
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def timed(make_df) -> float:
+    """Wall time of building one DataFrame and materializing it."""
+    t0 = time.monotonic()
+    materialize(make_df())
+    return time.monotonic() - t0
 
 
 def main() -> None:
-    spark = get_spark(app_name="yaetl-spark-bench", master=f"local[{CPUS}]",
-                      shuffle_partitions=int(CPUS))
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the JVM/codegen paths AND the Python UDF workers so per-query
-    # timings measure the engine, not session/interpreter startup.
-    warm = spark.read.parquet(f"{SF_DIR}/region.parquet")
-    materialize(warm)
-    materialize(
-        spark.range(32).mapInPandas(lambda it: it, schema="id long"))
-    # file-index + footer + scan-codegen init per table (fixed session
-    # setup, else it lands on whichever query touches a table first);
-    # events carries TIMESTAMP(NANOS) which Spark only reads as long
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for t in entry_mod.TABLES:
-        materialize(spark.read.parquet(f"{SF_DIR}/{t}.parquet").limit(1))
-    # first sort/TakeOrdered + first driver collect initialize their own
-    # codegen + result-serialization paths — warm those too
-    warm.orderBy("r_regionkey").limit(1).collect()
+    spark = session("yaetl-spark-bench")
+    warm_up(spark)
 
     # passthrough anchor: full lineitem scan + noop (BASELINE.md's ~500K
     # records/s/core anchor). Timed FIRST — before ~750 query executions
@@ -73,16 +56,9 @@ def main() -> None:
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     n_rows = li.count()
     materialize(li)  # cold scan (footer/codegen) excluded, like queries
-    pt_runs = []
-    for _ in range(n_warm):
-        t0 = time.monotonic()
-        materialize(li)
-        pt_runs.append(time.monotonic() - t0)
+    pt_runs = [timed(lambda: li) for _ in range(n_warm)]
     if min(pt_runs) > 0 and max(pt_runs) > 2.5 * min(pt_runs):
-        for _ in range(n_warm):
-            t0 = time.monotonic()
-            materialize(li)
-            pt_runs.append(time.monotonic() - t0)
+        pt_runs += [timed(lambda: li) for _ in range(n_warm)]
     passthrough_sec = statistics.median(pt_runs)
 
     # Each distinct query plan compiles its own whole-stage-codegen class
@@ -113,19 +89,13 @@ def main() -> None:
     # deliberately-unscalable oracle-contrast queries (e.g. the unpruned
     # fuzzy_match) stay OUT of the headline wall — it measures production
     # plans only — but are still timed into BENCH_DETAIL.json
-    contrast_names = getattr(entry_mod, "BENCH_CONTRAST", frozenset())
-    queries = entry_mod.queries()
-    for name, fn in sorted(queries.items()):
+    contrast_names = getattr(entry, "BENCH_CONTRAST", frozenset())
+    declared = queries()
+    for name, fn in declared.items():
         if name in contrast_names:
             continue
-        t0 = time.monotonic()
-        materialize(fn(spark, SF_DIR))
-        timings_cold[name] = round(time.monotonic() - t0, 3)
-        runs = []
-        for _ in range(n_warm):
-            t0 = time.monotonic()
-            materialize(fn(spark, SF_DIR))
-            runs.append(time.monotonic() - t0)
+        timings_cold[name] = round(timed(lambda: fn(spark, SF_DIR)), 3)
+        runs = [timed(lambda: fn(spark, SF_DIR)) for _ in range(n_warm)]
         runs_all[name] = runs
         timings[name] = round(statistics.median(runs), 3)
         spread[name] = [round(min(runs), 3), round(max(runs), 3)]
@@ -158,22 +128,17 @@ def main() -> None:
     requeued = sorted(set(requeued_spread) | set(requeued_drift))
     for name in requeued:
         runs = runs_all[name]
-        for _ in range(n_warm):
-            t0 = time.monotonic()
-            materialize(queries[name](spark, SF_DIR))
-            runs.append(time.monotonic() - t0)
+        runs += [timed(lambda: declared[name](spark, SF_DIR))
+                 for _ in range(n_warm)]
         timings[name] = round(statistics.median(runs), 3)
         spread[name] = [round(min(runs), 3), round(max(runs), 3)]
-    for name in sorted(contrast_names & set(queries)):
+    for name in sorted(contrast_names & set(declared)):
         # discard a cold run first, like the headline loop — otherwise
         # the contrast median mixes codegen-compiling and warm runs and
         # isn't comparable round-over-round
-        materialize(queries[name](spark, SF_DIR))
-        runs = []
-        for _ in range(3):
-            t0 = time.monotonic()
-            materialize(queries[name](spark, SF_DIR))
-            runs.append(time.monotonic() - t0)
+        materialize(declared[name](spark, SF_DIR))
+        runs = [timed(lambda: declared[name](spark, SF_DIR))
+                for _ in range(3)]
         contrast[name] = round(statistics.median(runs), 3)
 
     total = round(sum(timings.values()), 3)
@@ -201,7 +166,7 @@ def main() -> None:
         "sf": SF,
         "passthrough_rows_per_sec": passthrough_rps,
         "lineitem_rows": n_rows,
-        "cpus": int(CPUS),
+        "cpus": CPUS,
         "contrast_queries": contrast,
         "contrast_note": (
             "oracle-contrast queries (deliberately unpruned/unscalable "
@@ -230,7 +195,7 @@ def main() -> None:
             "detail_file": "BENCH_DETAIL.json",
             "sf": SF,
             "passthrough_rows_per_sec": passthrough_rps,
-            "cpus": int(CPUS),
+            "cpus": CPUS,
         }
         return json.dumps(compact, separators=(",", ":"))
 

@@ -5,7 +5,7 @@ Usage: python scripts/dump_plans.py <tag> [query ...]
   tag    subdirectory under plans/ and filename suffix, e.g. "r16" with
          suffix "before" -> plans/r16/<query>_before.txt
 Env:   SPARK_GRAFT_PLAN_SUFFIX (default "before"),
-       SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as elsewhere.
+       SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (see scripts/harness.py).
 
 Also prints a one-line JSON summary per query (exchange count, joins,
 scans, python-eval nodes) so a round's plan audit can grep one file.
@@ -22,11 +22,8 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-import __spark_entry__ as entry_mod  # noqa: E402
-from yaetl_spark.session import get_spark  # noqa: E402
+from scripts.harness import SF_DIR, queries, session  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 SUFFIX = os.environ.get("SPARK_GRAFT_PLAN_SUFFIX", "before")
 
 
@@ -34,32 +31,19 @@ def main() -> None:
     if len(sys.argv) < 2:
         sys.exit("usage: dump_plans.py <tag> [query ...]")
     tag = sys.argv[1]
-    names = sys.argv[2:]
-    queries = entry_mod.queries()
-    if names:
-        missing = [n for n in names if n not in queries]
-        if missing:
-            sys.exit(f"unknown queries: {missing}")
-    else:
-        names = sorted(queries)
+    selected = queries(sys.argv[2:])
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(
-        app_name="yaetl-spark-plan-dump",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = session("yaetl-spark-plan-dump")
 
     summary = {}
-    for name in names:
+    for name, fn in selected.items():
         try:
-            df = queries[name](spark, SF_DIR)
+            df = fn(spark, SF_DIR)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
         except Exception as exc:  # noqa: BLE001
@@ -79,8 +63,7 @@ def main() -> None:
             "python": re.findall(
                 r"(BatchEvalPython|ArrowEvalPython|MapInPandas|"
                 r"MapInArrow|FlatMapGroupsInPandas)", plan),
-            "sorts": plan.count("\n(") and len(
-                re.findall(r"\bSort \[", plan)),
+            "sorts": len(re.findall(r"\bSort \[", plan)),
             "window": len(re.findall(r"\bWindow\b", plan)),
         }
         print(json.dumps({name: summary[name]}, sort_keys=True),

@@ -74,6 +74,17 @@ def test_checkpoint_dir_same_fixpoint_as_local(spark, tmp_path):
     assert local == durable == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
+def test_checkpoint_dir_small_graph_writes_no_checkpoint(spark, tmp_path):
+    # a graph under the default local_threshold localizes to driver
+    # union-find; the reliable checkpoint must not have written the
+    # edge set before the probe decided that
+    got = _cc_dict(connected_components(
+        _edges(spark, [(1, 2), (2, 3), (10, 11)]),
+        checkpoint_dir=str(tmp_path)))
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert not list(tmp_path.rglob("rdd-*"))
+
+
 def test_max_iter_guard_raises(spark):
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(

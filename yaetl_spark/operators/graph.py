@@ -67,29 +67,17 @@ def connected_components(
     executor death mid-loop fails the job; a path (HDFS/S3A/local)
     switches to reliable ``checkpoint()`` so the truncated frames are
     replicated to that directory and the loop survives executor loss —
-    the right setting for a long dedup job on a real cluster. Both
-    strategies compute the identical fixpoint.
+    the right setting for a long dedup job on a real cluster (a graph
+    that localizes writes no checkpoint data). Both strategies compute
+    the identical fixpoint.
 
     Raises ``RuntimeError`` if the distributed loop hits ``max_iter``
     rounds without converging (pointer doubling makes that ~2^max_iter of
     effective diameter, so it signals bad input, not tuning).
     """
-    if checkpoint_dir is not None:
-        sc = edges.sparkSession.sparkContext
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        # Lazy: the logical plan is truncated to an RDD node immediately
-        # (that is what bounds Catalyst analysis of the loop), but the
-        # materializing job is deferred to the next action that needs
-        # the data — the per-iteration convergence count below, or the
-        # caller's own action — instead of a dedicated count() job per
-        # truncation. Guide §5: each synchronous driver job is pure
-        # round-trip latency at any scale.
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
+    reliable = checkpoint_dir is not None
+    if reliable:
+        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
     e = (
         edges.select(
@@ -101,12 +89,15 @@ def connected_components(
     # Symmetrize once; dedup so a hot pair does not multiply join output.
     e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
 
-    # Truncate BEFORE the localization probe: the lazy checkpoint makes
-    # the probe's count() materialize the deduped edge blocks, so the
+    # The lazy checkpoint truncates BEFORE the localization probe: the
+    # probe's count() then materializes the deduped edge blocks, so the
     # collect() below (small-graph path) and the iteration joins
     # (distributed path) both read those blocks instead of re-running
-    # the scan + distinct.
-    e = _truncate(e)
+    # the scan + distinct. The reliable checkpoint is an eager write of
+    # the whole edge set, so it waits until the distributed loop is
+    # sure to run: a graph that localizes writes nothing.
+    if not reliable:
+        e = _truncate(e, reliable=False)
 
     if local_threshold:
         # Localization probe: ONE fully-parallel count() job. (r16 used
@@ -120,11 +111,14 @@ def connected_components(
         # the consuming queries.)
         if e.count() <= local_threshold:
             return _local_union_find(e.collect(), e.sparkSession)
+    if reliable:
+        e = _truncate(e, reliable=True)
 
     labels = _truncate(
         e.select(F.col("a").alias("node"))
         .distinct()
-        .withColumn("comp", F.col("node"))
+        .withColumn("comp", F.col("node")),
+        reliable,
     )
 
     for _ in range(max_iter):
@@ -153,7 +147,8 @@ def connected_components(
             .select(
                 "node",
                 F.coalesce("p_comp", "comp").alias("comp"),
-            )
+            ),
+            reliable,
         )
         # This count is the iteration's ONLY synchronous job: it
         # materializes the (lazily checkpointed) doubled labels as a
@@ -171,6 +166,21 @@ def connected_components(
     raise RuntimeError(
         f"connected_components: no fixpoint after {max_iter} iterations"
     )
+
+
+def _truncate(df: DataFrame, reliable: bool) -> DataFrame:
+    """Cut ``df``'s lineage so an iterative loop's plan stays
+    iteration-sized. ``reliable``: an eager ``checkpoint()`` into the
+    directory the caller set (survives executor loss). Otherwise a lazy
+    ``localCheckpoint``: the logical plan is truncated to an RDD node
+    immediately (that is what bounds Catalyst analysis of the loop),
+    but the materializing job is deferred to the next action that needs
+    the data instead of a dedicated count() job per truncation. Guide
+    §5: each synchronous driver job is pure round-trip latency at any
+    scale."""
+    if reliable:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=False)
 
 
 def _local_union_find(rows, spark) -> DataFrame:
@@ -282,23 +292,13 @@ def pagerank(
         raise ValueError("iters must be >= 1")
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
-    if checkpoint_dir is not None:
-        sc = edges.sparkSession.sparkContext
-        sc.setCheckpointDir(checkpoint_dir)
+    reliable = checkpoint_dir is not None
+    if reliable:
+        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        # Lazy local checkpoint: lineage/plan truncation is immediate
-        # (the loop's Catalyst plans stay iteration-sized), but no
-        # per-iteration materializing job is submitted — the single
-        # nodes.count() below and the caller's own action compute the
-        # whole chain, each truncated frame caching as it materializes.
-        # iters eager checkpoints = iters synchronous driver round
-        # trips saved (guide §5), locally and on a cluster alike.
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
+    # The lazy path submits no per-iteration materializing job: the
+    # single nodes.count() below and the caller's own action compute
+    # the whole chain, each truncated frame caching as it materializes.
     e = _truncate(
         edges.select(
             F.col(src).cast("long").alias("_s"),
@@ -306,13 +306,15 @@ def pagerank(
         )
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
         .groupBy("_s", "_d")
-        .agg(F.count(F.lit(1)).alias("_w"))
+        .agg(F.count(F.lit(1)).alias("_w")),
+        reliable,
     )
     outw = e.groupBy("_s").agg(F.sum("_w").alias("_ow"))
     nodes = _truncate(
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node")))
-        .distinct()
+        .distinct(),
+        reliable,
     )
     n = nodes.count()
     if n == 0:
@@ -357,6 +359,7 @@ def pagerank(
                         + F.col("_dang") / F.lit(float(n))
                     )
                 ).alias("rank"),
-            )
+            ),
+            reliable,
         )
     return ranks.select("node", F.round("rank", 6).alias("rank"))
